@@ -4,7 +4,8 @@ Production ANN is not one query composing training + search (that is
 ``sim_ann_ivfpq``, the gate form) — it is an INDEX BUILD job that writes
 the quantized representation to storage, and search jobs that read the
 index without ever touching the corpus vectors except for the tiny
-refine shortlist.  This module provides exactly that split:
+refine shortlist.  This module provides exactly that split (tables are
+written, swapped and streamed through ``artifacts.py``):
 
 - :func:`build_ivfpq_index` writes three parquet tables under ``out_dir``:
   ``vectors``   (vec_id, cell, probe_cells, codes) — 8 int codes/vector,
@@ -29,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .artifacts import local_path, replace_table, start_batch_stream
 from .textops import (
     _DOT,
     _EMB_DIM,
@@ -36,7 +38,7 @@ from .textops import (
     _PQ_K,
     _PQ_M,
     _cell_top,
-    _emb_norm,
+    _emb,
     _pq_books_literal,
     _pq_sub_d2s,
     _train_pq_codebooks,
@@ -52,12 +54,19 @@ __all__ = [
 ]
 
 
-def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb_norm(spark, sf_dir)
-    # zero-norm guard on the BUILD face too (not just the append/stream
-    # encode): an all-zero embedding would flow x/0 = NaN into k-means
-    # training and the persisted base codes — the same silent poisoning
-    # _encode_new_rows drops
+def _unit_rows(rows: DataFrame) -> DataFrame:
+    """Corpus-schema (vec_id, embedding) rows as NORMALIZED (vec_id, v,
+    nrm=1) — the one expression chain of the build, the appends and the
+    search.  All-zero embeddings are dropped: they have no direction to
+    index, and x/0 = NaN would flow into k-means training and the
+    persisted cells/codes silently."""
+    e = rows.select(
+        "vec_id",
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
+    ).withColumn(
+        "nrm",
+        F.expr("sqrt(aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x))"),
+    )
     return e.filter(F.col("nrm") > 0).select(
         "vec_id",
         F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("v"),
@@ -112,72 +121,46 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     """Train the PQ codebooks, encode every (normalized) vector, assign
     coarse cells, and persist the index tables.  Returns build stats."""
     sub = _EMB_DIM // _PQ_M
-    e = _normalized(spark, sf_dir).persist()
+    e = _unit_rows(_emb(spark, sf_dir)).persist()
     try:
         books = _train_pq_codebooks(e, _PQ_M, _PQ_K, sub, iters=2, seed_mod=13)
         # TRAINED coarse quantizer — the same _trained_coarse(e) call
         # sim_ann_ivfpq makes, so the stored index reproduces the gate op
         coarse = _trained_coarse(e)
-        vectors = _encode_vectors(e, books, coarse)
         # the vectors table is partitioned by an `ingest` label from day
         # one: the initial build owns ingest=base, every later append
         # (batch or streaming micro-batch) owns its own partition, so a
         # replayed streaming batch OVERWRITES ITSELF (dynamic partition
-        # overwrite) instead of duplicating rows — the same
-        # replay-stability scheme the extraction stream uses
-        # partitionOverwriteMode pinned STATIC: a REBUILD must wipe every
-        # stale ingest partition — codes written under the old codebooks
-        # would otherwise survive and ADC-decode against the new ones
-        # (silently wrong distances).  A dynamic session default would
-        # overwrite ingest=base only.
-        vectors.withColumn("ingest", F.lit("base")).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "static").partitionBy(
-            "ingest"
-        ).parquet(out_dir + "/vectors")
-        spark.createDataFrame(
-            [
-                (m, code, books[m][code])
-                for m in range(_PQ_M)
-                for code in range(_PQ_K)
-            ],
-            "m int, code int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/codebook")
-        spark.createDataFrame(
-            [(cid, vec, nrm) for cid, vec, nrm in coarse],
-            "cell int, centroid array<double>, nrm double",
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/coarse")
+        # overwrite) instead of duplicating rows.  A REBUILD replaces the
+        # whole table, so no stale ingest partition (codes under the old
+        # codebooks) survives to ADC-decode against the new ones.
+        replace_table(
+            _encode_vectors(e, books, coarse).withColumn("ingest", F.lit("base")),
+            out_dir + "/vectors",
+            partition_by="ingest",
+        )
+        replace_table(
+            spark.createDataFrame(
+                [
+                    (m, code, books[m][code])
+                    for m in range(_PQ_M)
+                    for code in range(_PQ_K)
+                ],
+                "m int, code int, centroid array<double>",
+            ).coalesce(1),
+            out_dir + "/codebook",
+        )
+        replace_table(
+            spark.createDataFrame(
+                [(cid, vec, nrm) for cid, vec, nrm in coarse],
+                "cell int, centroid array<double>, nrm double",
+            ).coalesce(1),
+            out_dir + "/coarse",
+        )
         n = spark.read.parquet(out_dir + "/vectors").count()
     finally:
         e.unpersist()
     return {"n_vectors": n, "m": _PQ_M, "k": _PQ_K, "cells": len(coarse)}
-
-
-def _encode_new_rows(
-    new_rows: DataFrame,
-    books: list[list[list[float]]],
-    coarse: list[tuple[int, list[float], float]],
-) -> DataFrame:
-    """Normalize corpus-schema (vec_id, embedding) rows with the build's
-    expression chain and quantize them against fixed codebooks/cells —
-    the shared encode body of the batch append and the streaming face."""
-    e = new_rows.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    ).withColumn(
-        "nrm",
-        F.expr("sqrt(aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x))"),
-    )
-    # all-zero embeddings have no direction to index: dividing by nrm=0
-    # would push NaN cell assignments / PQ codes into the persisted index
-    # silently.  Drop them (policy documented in encode_into_index) — the
-    # streaming embed_neardup face makes the same call.
-    e = e.filter(F.col("nrm") > 0).select(
-        "vec_id",
-        F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("v"),
-        F.lit(1.0).alias("nrm"),
-    )
-    return _encode_vectors(e, books, coarse)
 
 
 def _write_ingest(encoded: DataFrame, index_dir: str, ingest: str) -> None:
@@ -250,7 +233,7 @@ def encode_into_index(
     coarse = _read_coarse(spark, index_dir)
     # persist: the write and the count would otherwise each run the full
     # codebook-literal encode job over new_rows
-    encoded = _encode_new_rows(new_rows, books, coarse).persist()
+    encoded = _encode_vectors(_unit_rows(new_rows), books, coarse).persist()
     try:
         _write_ingest(encoded, index_dir, ingest)
         n = encoded.count()
@@ -291,26 +274,18 @@ def start_stream_index_append(
     _check_partitioned_layout(spark, index_dir)
     books = _read_books(spark, index_dir)
     coarse = _read_coarse(spark, index_dir)
-    stream = (
-        spark.readStream.schema(EMBED_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def _append(batch_df, batch_id: int) -> None:
         _write_ingest(
-            _encode_new_rows(batch_df, books, coarse),
+            _encode_vectors(_unit_rows(batch_df), books, coarse),
             index_dir,
             "batch-%d" % batch_id,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_batch_stream(
+        spark, EMBED_INPUT_SCHEMA, input_dir, checkpoint_dir, _append,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compact_index_ingests(
@@ -328,42 +303,26 @@ def compact_index_ingests(
     real run size the knob is bytes-per-file, not a count — pair the
     coalesce with ``spark.sql.files.maxRecordsPerFile`` there.
 
-    Crash safety: the compacted table is staged to a sibling tmp dir and
-    swapped in rename-then-delete order (the Bloom-index ``words``
-    discipline) — the data is never deleted before its replacement is in
-    place, so a crash between the two renames leaves the previous table
-    intact under ``vectors.old`` (manual recovery: rename it back; reads
-    of the canonical path fail loudly until then).  Writer fencing
-    is the caller's job, same as :func:`compact_bloom_deltas` in
-    bloom_index: compact ONLY when no stream lineage on this index can
-    still replay — a batch replayed AFTER compaction would re-land its
-    ``batch-<n>`` partition alongside the compacted rows and its vectors
-    would rank as duplicate candidates.  (On a lakehouse this whole
-    function is an Iceberg rewrite-data-files action — atomic, with
-    snapshot isolation instead of renames.)"""
-    import os
-    import shutil
-
+    Crash safety: the compacted table is swapped in with
+    ``artifacts.replace_table`` — a crash leaves the previous table
+    readable.  Writer fencing is the caller's job, same as
+    :func:`compact_bloom_deltas` in bloom_index: compact ONLY when no
+    stream lineage on this index can still replay — a batch replayed
+    AFTER compaction would re-land its ``batch-<n>`` partition alongside
+    the compacted rows and its vectors would rank as duplicate
+    candidates."""
+    local_path(index_dir)  # refuse an unswappable dir before any work
     _check_partitioned_layout(spark, index_dir)
-    vectors = index_dir + "/vectors"
-    v = spark.read.parquet(vectors)
+    v = spark.read.parquet(index_dir + "/vectors")
     n_ingests = v.select("ingest").distinct().count()
-    tmp = vectors + ".compact.tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
+    replace_table(
         v.drop("ingest")
         .coalesce(max(1, target_files))
-        .withColumn("ingest", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("ingest")
-        .parquet(tmp)
+        .withColumn("ingest", F.lit("base")),
+        index_dir + "/vectors",
+        partition_by="ingest",
     )
-    n = spark.read.parquet(tmp).count()
-    old = vectors + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(vectors, old)
-    os.rename(tmp, vectors)
-    shutil.rmtree(old, ignore_errors=True)
+    n = spark.read.parquet(index_dir + "/vectors").count()
     return {"n_vectors": n, "n_ingests_folded": n_ingests}
 
 
@@ -378,7 +337,7 @@ def search_ivfpq_index(
     sub = _EMB_DIM // _PQ_M
     vectors = spark.read.parquet(index_dir + "/vectors")
     cb = _pq_books_literal(_read_books(spark, index_dir))
-    e = _normalized(spark, sf_dir)
+    e = _unit_rows(_emb(spark, sf_dir))
     q = (
         vectors.filter(F.col("vec_id") % 50 == 0)
         .select("vec_id", F.explode("probe_cells").alias("cell"))

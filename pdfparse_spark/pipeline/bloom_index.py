@@ -5,8 +5,8 @@ Production cross-run dedup is not one query that builds its filter
 in-plan (that is ``dedup_bloom_prior``, the gate form) — it is an INDEX
 BUILD job after each crawl that writes the filter to storage, EXTEND jobs
 that OR each new increment's bits in, and probe jobs that read the filter
-and flag suspected duplicates at scan speed.  This module is that split,
-the same lifecycle shape as ``ann_index.py``:
+and flag suspected duplicates at scan speed.  This module is that split;
+meta, table swap, stream face and checkpoints follow ``artifacts.py``:
 
 - :func:`build_bloom_index` writes two parquet tables under ``out_dir``:
   ``words`` (word_idx, word) — the bit set as SPARSE signed 64-bit
@@ -56,6 +56,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import (
+    checkpoint,
+    local_path,
+    read_meta,
+    replace_table,
+    start_batch_stream,
+    write_batch,
+    write_meta,
+)
 from .textops import (
     _BLOOM_BITS,
     _BLOOM_K,
@@ -74,7 +83,7 @@ __all__ = [
 ]
 
 _SEED_TAG = "bloomidx"
-_U64 = (1 << 64) - 1
+_META_SCHEMA = "bits int, k int, seed_tag string, n_set_bits long"
 
 # Past this filter size the constant-folded literal probe (one bits/8-byte
 # array shipped inside the plan) stops being sane — probe_bloom_index
@@ -84,128 +93,66 @@ _U64 = (1 << 64) - 1
 _LITERAL_MAX_BITS = 1 << 24
 
 
-def _distinct_positions(
-    docs: DataFrame, text_col: str, bits: int, k: int, seed_tag: str = _SEED_TAG
-) -> list[int]:
-    rows = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(
-            F.explode(
-                F.array(*_bloom_positions(F.col(text_col), seed_tag, bits, k))
-            ).alias("pos")
-        )
-        .distinct()
-        .collect()
-    )
-    return [r["pos"] for r in rows]
-
-
-def _or_rows_into(words: list[int], rows) -> list[int]:
-    """OR (word_idx, word) rows into a signed-word array, in place."""
-    for r in rows:
-        w = (words[r["word_idx"]] & _U64) | (r["word"] & _U64)
-        words[r["word_idx"]] = w - (1 << 64) if w >= (1 << 63) else w
-    return words
-
-
-def _sparse_words(pos_values) -> list[tuple[int, int]]:
-    """Fold bit positions into SPARSE (word_idx, signed_word) rows —
-    O(positions) work and memory, never the O(m/64) dense array (the
-    large-m discipline: nothing driver-side scales with the filter
-    size, only with the bits actually set)."""
-    d: dict[int, int] = {}
-    for p in pos_values:
-        d[p >> 6] = d.get(p >> 6, 0) | (1 << (p & 63))
-    return [
-        (i, w - (1 << 64) if w >= (1 << 63) else w)
-        for i, w in sorted(d.items())
-    ]
-
-
-def _write_rows(
+def _commit_words(
     spark: SparkSession,
-    out_dir: str,
-    rows: list[tuple[int, int]],
+    index_dir: str,
+    words: DataFrame,
     bits: int,
     k: int,
-    seed_tag: str = _SEED_TAG,
+    seed_tag: str,
 ) -> None:
-    """Persist sparse (word_idx, word) rows + meta.  A word index absent
-    from the table is all-zero (both probe paths treat it so), keeping
-    the words table O(set bits) even at m = 2^28+."""
-    n_set = sum(bin(w & _U64).count("1") for _, w in rows)
-    (
-        spark.createDataFrame(
-            rows or [(0, 0)], "word_idx int, word long"
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/words")
+    """Swap in ``words`` as the filter's sparse (word_idx, word) table — an
+    absent word_idx is all-zero on both probe paths, keeping the table
+    O(set bits) even at m = 2^28+ — then its meta.  Extend and compact
+    keep bits/k/seed, so a crash between the two swaps can leave only
+    the informational n_set_bits stale."""
+    if bits % 64:
+        raise ValueError("bits must be a multiple of 64")
+    # small filters (≤ the literal cutover) stay one tidy file; giant
+    # ones keep the write parallel
+    if bits <= _LITERAL_MAX_BITS:
+        words = words.coalesce(1)
+    replace_table(words, index_dir + "/words")
+    n_row = (
+        spark.read.parquet(index_dir + "/words")
+        .agg(F.sum(F.bit_count("word")).alias("n"))
+        .collect()[0]
     )
-    (
-        spark.createDataFrame(
-            [(bits, k, seed_tag, n_set)], "bits int, k int, seed_tag string, n_set_bits long"
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/meta")
-    )
+    write_meta(spark, index_dir, _META_SCHEMA, (bits, k, seed_tag, int(n_row["n"] or 0)))
 
 
 def _fold_rewrite_words(
     spark: SparkSession,
     index_dir: str,
-    bits: int,
-    k: int,
-    seed_tag: str,
-    extra: DataFrame | None = None,
+    docs: DataFrame | None = None,
+    text_col: str = "text",
     include_deltas: bool = False,
 ) -> None:
     """Fold the base words (optionally with every streaming delta and/or
-    an ``extra`` sparse increment frame) into a fresh sparse words table
+    the bits of a ``docs`` increment) into a fresh sparse words table
     by a DISTRIBUTED bit_or aggregate, then swap it in — the filter
     never materializes on the driver, so extend/compact work at any m.
-    Stage-write + rename because parquet cannot overwrite a table that
-    feeds the writing plan."""
-    import os
-    import shutil
-
+    Hashing parameters come from the stored meta."""
+    local_path(index_dir)  # refuse an unswappable dir before any work
+    meta = read_meta(spark, index_dir)
+    bits, k, seed_tag = meta["bits"], meta["k"], meta["seed_tag"]
     words = _read_words_df(spark, index_dir, include_deltas=include_deltas)
-    if extra is not None:
+    if docs is not None:
         words = (
-            words.unionByName(extra)
+            words.unionByName(_increment_words_df(docs, text_col, bits, k, seed_tag))
             .groupBy("word_idx")
             .agg(F.bit_or("word").alias("word"))
         )
-    words = words.filter(F.col("word") != 0)
-    tmp = index_dir + "/words_tmp"
-    # small filters (≤ the literal cutover) stay one tidy file; giant
-    # ones keep the write parallel
-    if bits <= _LITERAL_MAX_BITS:
-        words = words.coalesce(1)
-    words.write.mode("overwrite").parquet(tmp)
-    n_row = (
-        spark.read.parquet(tmp).agg(F.sum(F.bit_count("word")).alias("n")).collect()[0]
-    )
-    n_set = int(n_row["n"] or 0)
-    # rename-then-delete, not delete-then-rename: a crash between the two
-    # renames leaves the old table intact under words_old (manual
-    # recovery), never a window with NO words table.  On a real
-    # lakehouse this whole swap is one Iceberg commit.
-    old = index_dir + "/words_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(index_dir + "/words", old)
-    os.rename(tmp, index_dir + "/words")
-    shutil.rmtree(old, ignore_errors=True)
-    (
-        spark.createDataFrame(
-            [(bits, k, seed_tag, n_set)], "bits int, k int, seed_tag string, n_set_bits long"
-        ).coalesce(1).write.mode("overwrite").parquet(index_dir + "/meta")
-    )
+    _commit_words(spark, index_dir, words.filter(F.col("word") != 0), bits, k, seed_tag)
 
 
 def _increment_words_df(
     docs: DataFrame, text_col: str, bits: int, k: int, seed_tag: str
 ) -> DataFrame:
-    """A new increment's bits as a distributed sparse (word_idx, word)
-    frame — the build aggregate without the driver collect.  Map-side
-    combine bounds the shuffle by the ≤m position domain; the column-
-    valued shift needs the SQL surface (pyspark's shiftleft takes only
-    int bits)."""
+    """The bits of ``docs`` as a distributed sparse (word_idx, word)
+    frame — nothing collects on the driver.  Map-side combine bounds
+    the shuffle by the ≤m position domain; the column-valued shift needs
+    the SQL surface (pyspark's shiftleft takes only int bits)."""
     pos = (
         docs.filter(F.col(text_col).isNotNull())
         .select(
@@ -225,10 +172,6 @@ def _increment_words_df(
         .groupBy("word_idx")
         .agg(F.bit_or("w1").alias("word"))
     )
-
-
-def _read_meta(spark: SparkSession, index_dir: str):
-    return spark.read.parquet(index_dir + "/meta").collect()[0]
 
 
 def _delta_words(
@@ -252,31 +195,19 @@ def _delta_words(
     return deltas.select("word_idx", "word")
 
 
-def _read(
+def _word_array(
     spark: SparkSession,
     index_dir: str,
+    bits: int,
     include_deltas: bool = False,
     exclude_delta_batch: tuple[str, int] | None = None,
-    meta=None,
-) -> tuple[list[int], int, int, str]:
-    """Load the filter as a signed-word array + (bits, k, seed_tag) — the
-    STORED probe parameters, which every reader must hash with (a seed
-    mismatch is the silent false-negative failure mode).  With
-    ``include_deltas``, every streaming delta partition under
-    ``index_dir/deltas`` is OR-ed in; ``exclude_delta_batch=(ck, id)``
-    skips that one batch's delta (the stream's replay-stable probe).
-    Callers that already fetched the meta row pass it via ``meta`` to
-    skip the second read job."""
-    if meta is None:
-        meta = _read_meta(spark, index_dir)
-    bits, k, seed_tag = meta["bits"], meta["k"], meta["seed_tag"]
+) -> list[int]:
+    """The filter as a dense signed-word array on the driver — the
+    literal probe's input, sane only up to ``_LITERAL_MAX_BITS``."""
     words = [0] * (bits // 64)
-    _or_rows_into(words, spark.read.parquet(index_dir + "/words").collect())
-    if include_deltas:
-        deltas = _delta_words(spark, index_dir, exclude_delta_batch)
-        if deltas is not None:
-            _or_rows_into(words, deltas.collect())
-    return words, bits, k, seed_tag
+    for r in _read_words_df(spark, index_dir, include_deltas, exclude_delta_batch).collect():
+        words[r["word_idx"]] = r["word"]
+    return words
 
 
 def _read_words_df(
@@ -285,10 +216,13 @@ def _read_words_df(
     include_deltas: bool = False,
     exclude_delta_batch: tuple[str, int] | None = None,
 ) -> DataFrame:
-    """The filter as a deduplicated (word_idx, word) frame — the large-m
-    twin of :func:`_read` that never materializes the word array on the
-    driver.  Base and delta rows for the same index are folded with a
-    bitwise-OR aggregate (sparse rows stay sparse)."""
+    """The filter as a deduplicated (word_idx, word) frame — never
+    materialized on the driver.  With ``include_deltas``, every streaming
+    delta partition under ``index_dir/deltas`` is OR-ed in;
+    ``exclude_delta_batch=(ck, id)`` skips that one batch's delta (the
+    stream's replay-stable probe).  Base and delta rows for the same
+    index are folded with a bitwise-OR aggregate (sparse rows stay
+    sparse)."""
     words = spark.read.parquet(index_dir + "/words").select("word_idx", "word")
     if include_deltas:
         deltas = _delta_words(spark, index_dir, exclude_delta_batch)
@@ -307,10 +241,10 @@ def build_bloom_index(
 ) -> dict:
     """Build the filter over ``docs`` and persist it under ``out_dir``.
     Size ``bits ≈ 1.44 · expected_distinct · log2(1/target_fp)``."""
-    if bits % 64:
-        raise ValueError("bits must be a multiple of 64")
-    rows = _sparse_words(_distinct_positions(docs, text_col, bits, k))
-    _write_rows(spark, out_dir, rows, bits, k)
+    _commit_words(
+        spark, out_dir, _increment_words_df(docs, text_col, bits, k, _SEED_TAG),
+        bits, k, _SEED_TAG,
+    )
     return bloom_index_stats(spark, out_dir)
 
 
@@ -329,10 +263,7 @@ def extend_bloom_index(
     filters far past the literal cutover.  See the module docstring's
     writer-fencing note before running this while a stream maintains
     the same index."""
-    meta = _read_meta(spark, index_dir)
-    bits, k, seed_tag = meta["bits"], meta["k"], meta["seed_tag"]
-    inc = _increment_words_df(docs, text_col, bits, k, seed_tag)
-    _fold_rewrite_words(spark, index_dir, bits, k, seed_tag, extra=inc)
+    _fold_rewrite_words(spark, index_dir, docs=docs, text_col=text_col)
     return bloom_index_stats(spark, index_dir)
 
 
@@ -359,14 +290,12 @@ def probe_bloom_index(
     are verdict-identical (pytest-pinned)."""
     if method not in ("auto", "literal", "join"):
         raise ValueError("method must be 'auto', 'literal' or 'join'")
-    meta = _read_meta(spark, index_dir)
+    meta = read_meta(spark, index_dir)
     bits, k, seed_tag = meta["bits"], meta["k"], meta["seed_tag"]
     if method == "auto":
         method = "literal" if bits <= _LITERAL_MAX_BITS else "join"
     if method == "literal":
-        words, bits, k, seed_tag = _read(
-            spark, index_dir, include_deltas=include_deltas, meta=meta
-        )
+        words = _word_array(spark, index_dir, bits, include_deltas=include_deltas)
         probed = _with_bloom_hit(
             docs, words, text_col=text_col, seed_tag=seed_tag, bits=bits, k=k, out_col=out_col
         )
@@ -375,9 +304,9 @@ def probe_bloom_index(
         # with leg-specific aliases, so exchange reuse cannot collapse
         # them — without the checkpoint the base∪deltas scan + bit_or
         # aggregate would execute k times per probe
-        words_df = _read_words_df(
-            spark, index_dir, include_deltas=include_deltas
-        ).localCheckpoint(eager=True)
+        words_df = checkpoint(
+            _read_words_df(spark, index_dir, include_deltas=include_deltas)
+        )
         probed = _with_bloom_hit_join(
             docs, words_df, text_col=text_col, seed_tag=seed_tag, bits=bits, k=k, out_col=out_col
         )
@@ -394,7 +323,7 @@ def bloom_index_stats(
     filter a probe would actually see (base + streaming deltas).  Counts
     set bits distributedly (one bit_count aggregate over the sparse word
     frame), so it works at any m without a driver-side array."""
-    meta = _read_meta(spark, index_dir)
+    meta = read_meta(spark, index_dir)
     bits, k = meta["bits"], meta["k"]
     row = (
         _read_words_df(spark, index_dir, include_deltas=include_deltas)
@@ -420,19 +349,11 @@ def compact_bloom_deltas(
     tree is deleted afterwards (local filesystem paths only): do that
     ONLY once no stream lineage on this index can still replay a batch
     whose delta is being removed — see the writer-fencing note."""
-    meta = _read_meta(spark, index_dir)
-    _fold_rewrite_words(
-        spark,
-        index_dir,
-        meta["bits"],
-        meta["k"],
-        meta["seed_tag"],
-        include_deltas=True,
-    )
+    _fold_rewrite_words(spark, index_dir, include_deltas=True)
     if remove_deltas:
         import shutil
 
-        shutil.rmtree(index_dir + "/deltas", ignore_errors=True)
+        shutil.rmtree(local_path(index_dir) + "/deltas", ignore_errors=True)
     return bloom_index_stats(spark, index_dir)
 
 
@@ -479,23 +400,17 @@ def start_stream_bloom_index(
 
     seed_tag = _SEED_TAG
     try:
-        meta = _read_meta(spark, index_dir)
+        meta = read_meta(spark, index_dir)
         # stored params always win, seed included — hashing with anything
         # but the seed the bits were built with silently breaks the
         # no-false-negative guarantee
         bits, k, seed_tag = meta["bits"], meta["k"], meta["seed_tag"]
     except AnalysisException:
-        if bits % 64:
-            raise ValueError("bits must be a multiple of 64")
-        _write_rows(spark, index_dir, [], bits, k)
+        empty = spark.createDataFrame([], "word_idx int, word long")
+        _commit_words(spark, index_dir, empty, bits, k, seed_tag)
 
     ck_tag = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
     delta_root = "%s/deltas/ck=%s" % (index_dir, ck_tag)
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def _process_batch(batch_df, batch_id: int) -> None:
         keyed = (
@@ -515,49 +430,42 @@ def start_stream_bloom_index(
             # literal cutover a micro-batch must neither materialize the
             # dense word array on the driver nor ship a tens-of-MB
             # literal in every batch plan
+            own = (ck_tag, batch_id)
             if bits <= _LITERAL_MAX_BITS:
-                prior, _, _, _ = _read(
-                    spark,
-                    index_dir,
-                    include_deltas=True,
-                    exclude_delta_batch=(ck_tag, batch_id),
+                prior = _word_array(
+                    spark, index_dir, bits, include_deltas=True, exclude_delta_batch=own
                 )
                 probed = _with_bloom_hit(
                     marked, prior, seed_tag=seed_tag, bits=bits, k=k, out_col="prior_hit"
                 )
             else:
-                words_df = _read_words_df(
-                    spark,
-                    index_dir,
-                    include_deltas=True,
-                    exclude_delta_batch=(ck_tag, batch_id),
-                ).localCheckpoint(eager=True)
+                words_df = checkpoint(
+                    _read_words_df(
+                        spark, index_dir, include_deltas=True, exclude_delta_batch=own
+                    )
+                )
                 probed = _with_bloom_hit_join(
                     marked, words_df, seed_tag=seed_tag, bits=bits, k=k, out_col="prior_hit"
                 )
-            probed.select(
-                "id",
-                "prior_hit",
-                "within_dup",
-                F.greatest("prior_hit", "within_dup").alias("bloom_hit"),
-            ).write.mode("overwrite").parquet("%s/batch=%d" % (out_dir, batch_id))
-            rows = _sparse_words(
-                _distinct_positions(keyed, "text", bits, k, seed_tag=seed_tag)
+            write_batch(
+                probed.select(
+                    "id",
+                    "prior_hit",
+                    "within_dup",
+                    F.greatest("prior_hit", "within_dup").alias("bloom_hit"),
+                ),
+                out_dir,
+                batch_id,
             )
-            (
-                spark.createDataFrame(rows or [(0, 0)], "word_idx int, word long")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet("%s/batch=%d" % (delta_root, batch_id))
+            write_batch(
+                _increment_words_df(keyed, "text", bits, k, seed_tag).coalesce(1),
+                delta_root,
+                batch_id,
             )
         finally:
             keyed.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(_process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_batch_stream(
+        spark, INPUT_SCHEMA, input_dir, checkpoint_dir, _process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,10 +1,9 @@
 """Persisted conversation-dedup index: index a corpus's turn-hash chains
 once, screen any later transcript increment — or a stream — from storage.
 
-Cross-run conversation dedup is the fifth instance of the engine's
-index-lifecycle pattern (``ann_index.py``, ``bloom_index.py``,
-``dsir_model.py``, ``decon_index.py``), applied to ``convops``' md5
-turn-hash chains: yesterday's crawl is already deduped and shipped;
+Cross-run conversation dedup over ``convops``' md5 turn-hash chains
+(meta, table swap, stream face and checkpoints follow ``artifacts.py``):
+yesterday's crawl is already deduped and shipped;
 today's increment must not re-admit a session that is an exact copy —
 or an abandoned retry prefix — of anything already indexed.
 
@@ -24,11 +23,10 @@ or an abandoned retry prefix — of anything already indexed.
   indexed session — one rule catches both duplicate grains.
 - :func:`start_stream_conv_screen` screens a transcript STREAM per
   micro-batch against the index read ONCE at start.  Verdicts are
-  conversation-local given the static index, so a replayed batch
-  overwrites its own ``batch=<id>`` dir with identical rows.  Each
-  stream file must carry complete conversations (the stream_extract
-  ingestion contract) — a session split across files would chain only
-  the turns seen in its batch.
+  conversation-local given the static index.  Each stream file must
+  carry complete conversations (the stream_extract ingestion contract)
+  — a session split across files would chain only the turns seen in
+  its batch.
 
 Deliberate asymmetry, stated honestly: an incoming conversation that
 EXTENDS an indexed session (the index holds the abandoned prefix, the
@@ -48,6 +46,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import (
+    checkpoint,
+    checkpoint_scope,
+    read_batches,
+    read_meta,
+    replace_table,
+    start_batch_stream,
+    write_batch,
+    write_meta,
+)
 from .convops import conv_chains
 
 __all__ = [
@@ -85,26 +93,14 @@ def build_conv_index(
 ) -> dict:
     """Index every chain-position value of ``transcripts`` and persist
     the value set + meta.  Returns index stats."""
-    vals = _chain_values(transcripts)
-    vals.write.mode("overwrite").parquet(out_dir + "/chains")
-    (
-        spark.createDataFrame([(_FEAT_TAG,)], "feat_tag string")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(out_dir + "/meta")
-    )
+    replace_table(_chain_values(transcripts), out_dir + "/chains")
+    write_meta(spark, out_dir, "feat_tag string", (_FEAT_TAG,))
     n = spark.read.parquet(out_dir + "/chains").count()
     return {"n_chain_values": n}
 
 
 def _read_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    meta = spark.read.parquet(index_dir + "/meta").collect()[0]
-    if meta["feat_tag"] != _FEAT_TAG:
-        raise ValueError(
-            "conversation index at %r was built under chain convention %r; "
-            "this build hashes with %r — probing would silently mis-screen "
-            "every session, rebuild the index" % (index_dir, meta["feat_tag"], _FEAT_TAG)
-        )
+    read_meta(spark, index_dir, tag=_FEAT_TAG)
     return spark.read.parquet(index_dir + "/chains").select("h")
 
 
@@ -115,23 +111,14 @@ def extend_conv_index(
     Idempotent by value: re-running after a crash (or with an already-
     indexed corpus) appends nothing new that matters."""
     stored = _read_index(spark, index_dir)
-    jsc = spark.sparkContext._jsc
-    pre = set(jsc.getPersistentRDDs().keys())
-    # eager localCheckpoint, not persist: it TRUNCATES lineage, so the
-    # append below never re-reads the very files it is appending to
-    # (persist could silently recompute from source on eviction); the
-    # blocks are RDD-level, so release them by id diff afterwards
-    new = (
-        _chain_values(transcripts)
-        .join(stored, "h", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    n_new = new.count()
-    if n_new:
-        new.write.mode("append").parquet(index_dir + "/chains")
-    for rid, rdd in list(jsc.getPersistentRDDs().items()):
-        if rid not in pre:
-            rdd.unpersist(False)
+    # checkpoint, not persist: it TRUNCATES lineage, so the append below
+    # never re-reads the very files it is appending to (persist could
+    # silently recompute from source on eviction)
+    with checkpoint_scope():
+        new = checkpoint(_chain_values(transcripts).join(stored, "h", "left_anti"))
+        n_new = new.count()
+        if n_new:
+            new.write.mode("append").parquet(index_dir + "/chains")
     return {"n_added": n_new}
 
 
@@ -174,31 +161,17 @@ def start_stream_conv_screen(
     set is read ONCE at stream start and pinned in memory (an index is
     immutable for its probing lifetime — extends write new files, a new
     stream picks them up); per-batch work is one chain job + one
-    semi-join.  Verdicts are conversation-local given the static index,
-    so a replayed batch overwrites its own ``batch=<id>`` dir with
-    identical rows (the start_stream_dsir_score discipline)."""
-    stored = _read_index(spark, index_dir).localCheckpoint(eager=True)
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    semi-join."""
+    stored = checkpoint(_read_index(spark, index_dir))
 
     def _screen_batch(batch_df, batch_id: int) -> None:
-        _probe(conv_chains(batch_df), stored).write.mode("overwrite").parquet(
-            "%s/batch=%d" % (out_dir, batch_id)
-        )
+        write_batch(_probe(conv_chains(batch_df), stored), out_dir, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_screen_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_batch_stream(
+        spark, TRANSCRIPT_INPUT_SCHEMA, input_dir, checkpoint_dir, _screen_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_conv_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch=*")
+    return read_batches(spark, out_dir)

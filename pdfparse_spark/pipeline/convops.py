@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .artifacts import checkpoint, release
+
 __all__ = [
     "conv_chains",
     "conv_dedup_exact",
@@ -215,33 +217,27 @@ def conv_dedup_filter(df: DataFrame) -> tuple[DataFrame, dict]:
     fraction, so AQE broadcasts them and the filter is map-side; if a
     pathological corpus ever makes the drop set huge, the fallback is a
     conv_id shuffle of keys the extraction stage was about to shuffle
-    anyway.  The chains checkpoint is released before returning (the
-    run_curate RDD-diff discipline); only the drop-set checkpoint rides
-    on with the returned frame — the caller's session teardown (or a
-    post-run RDD-diff release) frees it."""
-    spark = df.sparkSession
-    jsc = spark.sparkContext._jsc
-    pre = set(jsc.getPersistentRDDs().keys())
-    ch = conv_chains(df).localCheckpoint(eager=True)
-    ch_ids = set(jsc.getPersistentRDDs().keys()) - pre
-    n_convs = ch.count()
-    drop = (
-        conv_dedup_exact(df, chains=ch)
-        .select("conv_id", F.col("keep").alias("keep_exact"))
-        .join(
-            conv_prefix_dedup(df, chains=ch).select(
-                "conv_id", F.col("keep").alias("keep_prefix")
-            ),
-            "conv_id",
+    anyway.  The chains checkpoint is released before returning; only
+    the drop-set checkpoint rides on with the returned frame (released
+    by the caller's ``artifacts.checkpoint_scope``, if any)."""
+    ch = checkpoint(conv_chains(df))
+    try:
+        n_convs = ch.count()
+        drop = checkpoint(
+            conv_dedup_exact(df, chains=ch)
+            .select("conv_id", F.col("keep").alias("keep_exact"))
+            .join(
+                conv_prefix_dedup(df, chains=ch).select(
+                    "conv_id", F.col("keep").alias("keep_prefix")
+                ),
+                "conv_id",
+            )
+            .filter(~(F.col("keep_exact") & F.col("keep_prefix")))
+            .select("conv_id")
         )
-        .filter(~(F.col("keep_exact") & F.col("keep_prefix")))
-        .select("conv_id")
-        .localCheckpoint(eager=True)
-    )
+    finally:
+        release(ch)
     n_dropped = drop.count()
-    for rid, rdd in list(jsc.getPersistentRDDs().items()):
-        if rid in ch_ids:
-            rdd.unpersist(False)
     return (
         df.join(drop, "conv_id", "left_anti"),
         {"n_convs": n_convs, "n_convs_dropped": n_dropped},

@@ -1,8 +1,8 @@
 """Persisted decontamination index + streaming scorer — the
 EXPLICIT-benchmark production face of ``decontaminate_ngram`` /
-``decontaminate_jaccard`` (the ``dsir_model`` lifecycle discipline: build
-the small artifact once from the eval suites, score any later frame or
-stream against storage).
+``decontaminate_jaccard``: build the small artifact once from the eval
+suites, score any later frame or stream against storage (table swap and
+stream face follow ``artifacts.py``).
 
 The gate ops split ONE corpus deterministically (doc_id % 97) so DuckDB
 can verify them; a real pipeline instead holds a fixed benchmark corpus
@@ -22,8 +22,7 @@ shingle exceeds the cap, pinned by pytest).
 
 Scoring is per-row-local given the static index (a doc's verdict depends
 only on its own shingles), so the streaming face needs NO cross-batch
-state: a replayed micro-batch overwrites its own ``batch=<id>`` dir with
-identical rows — replay-stable without any probe/exclusion protocol.
+state.
 """
 
 from __future__ import annotations
@@ -31,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import read_batches, replace_table, start_batch_stream, write_batch
 from .dsir_model import DOC_INPUT_SCHEMA, _toks
 from .textops import _DECON_JACC_TAU, _FIVEGRAMS, _SHINGLES
 
@@ -64,18 +64,18 @@ def build_decon_index(
         sh3 = arr.select(
             F.col("doc_id").alias("bench_id"), F.explode(F.expr(_SHINGLES)).alias("sh")
         )
-        g5.write.mode("overwrite").parquet(index_dir + "/grams5")
-        sh3.write.mode("overwrite").parquet(index_dir + "/sh3")
+        replace_table(g5, index_dir + "/grams5")
+        replace_table(sh3, index_dir + "/sh3")
     finally:
         arr.unpersist()
-    sizes = (
+    replace_table(
         spark.read.parquet(index_dir + "/sh3")
         .groupBy("bench_id")
-        .agg(F.count("*").alias("nb"))
+        .agg(F.count("*").alias("nb")),
+        index_dir + "/sizes",
     )
-    sizes.write.mode("overwrite").parquet(index_dir + "/sizes")
     return {
-        "n_bench_docs": sizes.count(),
+        "n_bench_docs": spark.read.parquet(index_dir + "/sizes").count(),
         "n_grams5": spark.read.parquet(index_dir + "/grams5").count(),
     }
 
@@ -136,14 +136,9 @@ def _score(
 
 
 def _read_index(spark: SparkSession, index_dir: str):
-    # persist (not localCheckpoint): the benchmark-sized tables pin in the
-    # block cache across a stream's batches but stay EVICTABLE and carry
-    # their parquet lineage, so memory pressure or loss just re-reads —
-    # no unreleasable checkpoint blocks accumulate in a borrowed session
-    g5 = spark.read.parquet(index_dir + "/grams5").persist()
-    sh3 = spark.read.parquet(index_dir + "/sh3").persist()
-    sizes = spark.read.parquet(index_dir + "/sizes").persist()
-    return g5, sh3, sizes
+    return tuple(
+        spark.read.parquet("%s/%s" % (index_dir, t)) for t in ("grams5", "sh3", "sizes")
+    )
 
 
 def score_with_decon_index(
@@ -156,9 +151,9 @@ def score_with_decon_index(
     Scale: both probes are broadcast equality joins against the
     benchmark-sized tables plus doc-keyed aggregates — the incoming
     corpus streams through with no by-shingle shuffle at all.  Nothing
-    is persisted here (the score_with_dsir_model discipline — no
-    unreleasable blocks in a borrowed session); pre-persist ``docs``'s
-    tokenized form yourself if composing many scoring jobs over it."""
+    is persisted here (no unreleasable blocks in a borrowed session);
+    pre-persist ``docs``'s tokenized form yourself if composing many
+    scoring jobs over it."""
     g5, sh3, sizes = _read_index(spark, index_dir)
     return _score(_with_arr(docs), g5, sh3, sizes, tau=tau)
 
@@ -175,43 +170,27 @@ def start_stream_decon(
 ):
     """Screen a document stream against the stored benchmark index.  The
     index is read ONCE at stream start (an index is immutable for its
-    lifetime — a new eval-suite release rebuilds it) and closure-captured;
-    per-batch work is the one shared scoring job.  Verdicts are
-    row-local given the static index, so a replayed batch overwrites its
-    own ``batch=<id>`` dir with identical rows (replay-stable with no
-    cross-batch state — the ``start_stream_dsir_score`` discipline)."""
-    g5, sh3, sizes = _read_index(spark, index_dir)
-
-    stream = (
-        spark.readStream.schema(DOC_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    lifetime — a new eval-suite release rebuilds it) and pinned in the
+    block cache for the stream's batches: persist, not a checkpoint, so
+    the tables stay evictable and carry their parquet lineage.  Per-batch
+    work is the one shared scoring job."""
+    g5, sh3, sizes = (t.persist() for t in _read_index(spark, index_dir))
 
     def _score_batch(batch_df, batch_id: int) -> None:
         # persist THIS batch's tokenized frame (both legs consume it) and
-        # release exactly it after the write: Dataset.unpersist on the
-        # handle we persisted frees precisely our own blocks — unlike a
-        # getPersistentRDDs-diff sweep, which would race a concurrent
-        # job's checkpoints in a shared session — and a long-lived stream
+        # release exactly it after the write, so a long-lived stream
         # accumulates nothing batch over batch
         arr = _with_arr(batch_df).persist()
         try:
-            _score(arr, g5, sh3, sizes, tau=tau).write.mode("overwrite").parquet(
-                "%s/batch=%d" % (out_dir, batch_id)
-            )
+            write_batch(_score(arr, g5, sh3, sizes, tau=tau), out_dir, batch_id)
         finally:
             arr.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(_score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_batch_stream(
+        spark, DOC_INPUT_SCHEMA, input_dir, checkpoint_dir, _score_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_decon_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch=*")
+    return read_batches(spark, out_dir)

@@ -5,9 +5,8 @@ Production data selection is not one query that trains its importance
 model in-plan (that is ``docs_dsir_weights``, the gate form, and
 ``dsir_weights_frames``, the explicit-target form) — it is a TRAIN job
 run when the target set changes, and many SCORE jobs that apply the
-stored model to each new crawl increment.  This module is that split,
-the third instance of the engine's index-lifecycle pattern
-(``ann_index.py``, ``bloom_index.py``):
+stored model to each new crawl increment.  This module is that split;
+meta, table swap and stream face follow ``artifacts.py``:
 
 - :func:`train_dsir_model` fits the hashed unigram+bigram bucket LM over
   (raw pool, target corpus) and writes two parquet tables under
@@ -23,8 +22,7 @@ the third instance of the engine's index-lifecycle pattern
 - :func:`start_stream_dsir_score` scores a document STREAM with the
   stored model: per-doc scores depend only on that document's own
   features and the static λ, so micro-batch boundaries cannot change
-  any verdict and a replayed batch rewrites its own output partition
-  byte-identically (dynamic per-batch dirs, the stream_extract scheme).
+  any verdict.
 
 Scale: training is one explode + hash-aggregate onto ≤``buckets`` keys
 (map-side combine — each task ships ≤buckets partial rows regardless of
@@ -41,6 +39,15 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import (
+    checkpoint,
+    read_meta,
+    release,
+    replace_table,
+    start_batch_stream,
+    write_batch,
+    write_meta,
+)
 from .textops import _DSIR_PROD_BUCKETS, _TOKS_T, _dsir_fb, _dsir_score
 
 __all__ = [
@@ -82,13 +89,11 @@ def train_dsir_model(
     fb = _dsir_fb(_toks(raw_docs, text_col), F.lit(False), buckets=buckets).unionByName(
         _dsir_fb(_toks(target_docs, text_col), F.lit(True), buckets=buckets)
     )
-    bc = (
-        fb.groupBy("b")
-        .agg(
+    bc = checkpoint(
+        fb.groupBy("b").agg(
             F.sum(F.col("is_t").cast("long")).alias("ct"),
             F.sum((~F.col("is_t")).cast("long")).alias("cr"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = bc.agg(F.sum("ct").alias("tt"), F.sum("cr").alias("tr")).collect()[0]
     tt, tr = int(tot["tt"] or 0), int(tot["tr"] or 0)
@@ -98,30 +103,18 @@ def train_dsir_model(
         - F.log((F.col("cr") + 1).cast("double"))
         + F.lit(math.log(tr + buckets))
     )
-    (
-        bc.select("b", lam.alias("lam"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(out_dir + "/lm")
-    )
-    (
-        spark.createDataFrame(
-            [(buckets, tt, tr, _FEAT_TAG)],
-            "buckets int, tt long, tr long, feat_tag string",
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/meta")
+    replace_table(bc.select("b", lam.alias("lam")).coalesce(1), out_dir + "/lm")
+    release(bc)
+    write_meta(
+        spark, out_dir, "buckets int, tt long, tr long, feat_tag string",
+        (buckets, tt, tr, _FEAT_TAG),
     )
     n_seen = spark.read.parquet(out_dir + "/lm").count()
     return {"buckets": buckets, "n_buckets_seen": n_seen, "tt": tt, "tr": tr}
 
 
 def _read_model(spark: SparkSession, model_dir: str):
-    meta = spark.read.parquet(model_dir + "/meta").collect()[0]
-    if meta["feat_tag"] != _FEAT_TAG:
-        raise ValueError(
-            "model at %r was trained under feature space %r; this build "
-            "scores with %r — rescoring would be silently wrong, retrain "
-            "the model" % (model_dir, meta["feat_tag"], _FEAT_TAG)
-        )
+    meta = read_meta(spark, model_dir, tag=_FEAT_TAG)
     lm = spark.read.parquet(model_dir + "/lm").select("b", "lam")
     return meta, lm
 
@@ -157,34 +150,17 @@ def start_stream_dsir_score(
     """Score a document stream against the persisted model.  The λ table
     and meta are read ONCE at stream start (a model is immutable for its
     lifetime — retraining writes a new model dir) and closure-captured;
-    the per-batch work is one scoring job.  Per-doc scores depend only
-    on the doc's own features and the static λ, so batch boundaries
-    cannot change verdicts and a replayed batch overwrites its own
-    ``batch=<id>`` output dir with identical rows (replay-stable without
-    any probe/exclusion protocol — DSIR scoring has no cross-row
-    state, unlike the Bloom stream)."""
+    the per-batch work is one scoring job."""
     meta, lm = _read_model(spark, model_dir)
-    lm = lm.localCheckpoint(eager=True)  # pin the tiny table in memory
+    lm = checkpoint(lm)  # pin the tiny table in memory
     buckets = int(meta["buckets"])
-
-    stream = (
-        spark.readStream.schema(DOC_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def _score_batch(batch_df, batch_id: int) -> None:
         toks = _toks(batch_df, "text")
         fb = _dsir_fb(toks, F.lit(False), buckets=buckets).select("doc_id", "b")
-        _dsir_score(toks, fb, lm).write.mode("overwrite").parquet(
-            "%s/batch=%d" % (out_dir, batch_id)
-        )
+        write_batch(_dsir_score(toks, fb, lm), out_dir, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_batch_stream(
+        spark, DOC_INPUT_SCHEMA, input_dir, checkpoint_dir, _score_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

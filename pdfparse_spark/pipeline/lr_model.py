@@ -6,8 +6,7 @@ query that trains its classifier in-plan (that is ``train_embed_lr``,
 the gate form) plus a hardwired scoring pass (``embed_quality_score``) —
 it is a TRAIN job run when labeled data changes, and many SCORE jobs
 that apply the stored model to each new crawl increment.  This module is
-that split, the fourth instance of the engine's index-lifecycle pattern
-(``ann_index.py``, ``bloom_index.py``, ``dsir_model.py``):
+that split; meta, table swap and stream face follow ``artifacts.py``:
 
 - :func:`train_lr_model` runs the distributed full-batch GD loop
   (``textops._lr_fit`` — one aggregate job per iteration, ~dim+2 doubles
@@ -29,9 +28,7 @@ that split, the fourth instance of the engine's index-lifecycle pattern
 - :func:`start_stream_lr_score` scores an embedding STREAM with the
   stored model: per-row scores depend only on that row's own vector and
   the static weights, so micro-batch boundaries cannot change any
-  verdict and a replayed batch rewrites its own ``batch=<id>`` output
-  partition byte-identically (dynamic per-batch dirs, the stream_extract
-  scheme).
+  verdict.
 
 Scale: training is ``iters`` map-side-combinable aggregate jobs over a
 persisted standardized projection (textops.train_embed_lr's plan); the
@@ -46,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import read_meta, replace_table, start_batch_stream, write_batch, write_meta
 from .textops import (
     _LR_ITERS,
     _LR_LABEL,
@@ -104,38 +102,21 @@ def train_lr_model(
     bias = b
     for wj, mj, sj in zip(w, mu, sd):
         bias -= wj * mj / sj
-    (
+    replace_table(
         spark.createDataFrame(
-            [
-                (j, float(w_raw[j]), float(mu[j]), float(sd[j]))
-                for j in range(dim)
-            ],
+            [(j, float(w_raw[j]), float(mu[j]), float(sd[j])) for j in range(dim)],
             "pos int, w double, mu double, sd double",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(out_dir + "/weights")
+        ).coalesce(1),
+        out_dir + "/weights",
     )
     final_loss = trace[-1][1] if trace else float("nan")
-    (
-        spark.createDataFrame(
-            [
-                (
-                    dim,
-                    float(bias),
-                    int(target_label),
-                    int(iters),
-                    float(rate),
-                    float(final_loss),
-                    _FEAT_TAG,
-                )
-            ],
-            "dim int, bias double, target_label int, iters int, "
-            "rate double, final_loss double, feat_tag string",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(out_dir + "/meta")
+    write_meta(
+        spark,
+        out_dir,
+        "dim int, bias double, target_label int, iters int, "
+        "rate double, final_loss double, feat_tag string",
+        (dim, float(bias), int(target_label), int(iters), float(rate),
+         float(final_loss), _FEAT_TAG),
     )
     return {
         "dim": dim,
@@ -146,13 +127,7 @@ def train_lr_model(
 
 
 def _read_model(spark: SparkSession, model_dir: str):
-    meta = spark.read.parquet(model_dir + "/meta").collect()[0]
-    if meta["feat_tag"] != _FEAT_TAG:
-        raise ValueError(
-            "model at %r was trained under scoring convention %r; this "
-            "build scores with %r — applying it would be silently wrong, "
-            "retrain the model" % (model_dir, meta["feat_tag"], _FEAT_TAG)
-        )
+    meta = read_meta(spark, model_dir, tag=_FEAT_TAG)
     rows = (
         spark.read.parquet(model_dir + "/weights")
         .orderBy("pos")
@@ -211,29 +186,14 @@ def start_stream_lr_score(
 ):
     """Score an embedding stream against the persisted model.  Meta and
     weights are read ONCE at stream start (a model is immutable for its
-    lifetime — retraining writes a new model dir); per-row scores have no
-    cross-row state, so batch boundaries cannot change verdicts and a
-    replayed batch overwrites its own ``batch=<id>`` dir with identical
-    rows (replay-stable without any probe/exclusion protocol)."""
+    lifetime — retraining writes a new model dir)."""
     meta, w = _read_model(spark, model_dir)  # once; fail fast BEFORE start
     dim, bias = int(meta["dim"]), float(meta["bias"])
 
-    stream = (
-        spark.readStream.schema(EMB_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
     def _score_batch(batch_df, batch_id: int) -> None:
-        _score_frame(batch_df, dim, bias, w, "embedding").write.mode(
-            "overwrite"
-        ).parquet("%s/batch=%d" % (out_dir, batch_id))
+        write_batch(_score_frame(batch_df, dim, bias, w, "embedding"), out_dir, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_batch_stream(
+        spark, EMB_INPUT_SCHEMA, input_dir, checkpoint_dir, _score_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -33,6 +33,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from .artifacts import checkpoint, checkpoint_scope
 from .session import get_spark
 from .textops import (
     _curate_parts,
@@ -117,12 +118,20 @@ def main(argv: list[str] | None = None) -> int:
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(master=args.master, app_name="pdfparse_curate")
     t0 = time.monotonic()
-    # snapshot the persisted-RDD ids NOW: localCheckpoint blocks (the
-    # shared tokenized frame and any checkpoints the gate ops create) are
-    # RDD-level and Dataset.unpersist() cannot free them — at the end we
-    # release exactly the RDDs this run added, never a borrowed session's
-    pre_persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    # every checkpoint this run takes (the shared tokenized frame and any
+    # the gate ops create) is released at the end — inside a borrowed
+    # long-lived session each run would otherwise leak one full (text,
+    # arr) copy of the corpus until the session dies
+    with checkpoint_scope():
+        metrics = _curate(spark, args)
+    metrics["wall_sec"] = round(time.monotonic() - t0, 3)
+    print(json.dumps(metrics))
+    if owns_session:
+        spark.stop()
+    return 0
 
+
+def _curate(spark, args) -> dict:
     d = _docs(spark, args.sf_dir)
     n_in = d.count()
 
@@ -132,9 +141,9 @@ def main(argv: list[str] | None = None) -> int:
         from .textops import docs_split_holdout
 
         split = docs_split_holdout(spark, args.sf_dir)
-        val = split.filter(F.col("split") == "val").select(
-            "doc_id", "holdout_rank"
-        ).localCheckpoint(eager=True)
+        val = checkpoint(
+            split.filter(F.col("split") == "val").select("doc_id", "holdout_rank")
+        )
         n_held = val.count()
         (
             d.join(val, "doc_id")
@@ -148,7 +157,7 @@ def main(argv: list[str] | None = None) -> int:
     # ONE shared tokenized checkpoint for every filter leg — including
     # the minhash pair source (the corpus_curate_full discipline:
     # tokenize once, not per leg)
-    docs_tok = _tokenized_docs(spark, args.sf_dir)
+    docs_tok = corpus_tok = _tokenized_docs(spark, args.sf_dir)
     if val_ids is not None:
         # every leg consumes docs_tok, so one anti-join restricts the
         # whole composed plan to the train split (the checkpoint itself
@@ -255,16 +264,17 @@ def main(argv: list[str] | None = None) -> int:
         )
 
     if args.strip_spans:
-        # corpus-level duplicated-span coverage (the dedup_span_strip
-        # body) over the SHARED tokenized checkpoint, applied to the
-        # curated survivors: the cleaned alnum-token stream becomes the
-        # training payload (clean_text) — lossy wrt punctuation/case by
-        # design, it is exactly the stream dedup_span_strip sha-verifies
+        # duplicated-span coverage (the dedup_span_strip body) over the
+        # WHOLE corpus — held-out docs included, so a span a train doc
+        # shares only with the eval slice is stripped too — applied to
+        # the curated survivors: the cleaned alnum-token stream becomes
+        # the training payload (clean_text) — lossy wrt punctuation/case
+        # by design, it is exactly the stream dedup_span_strip sha-verifies
         from .textops import _dup_gram_cov
 
         toks_arr = docs_tok.select("doc_id", "arr")
         covered = (
-            _dup_gram_cov(spark, args.sf_dir, toks=toks_arr)
+            _dup_gram_cov(spark, args.sf_dir, toks=corpus_tok.select("doc_id", "arr"))
             .select("doc_id", F.explode(F.sequence("s", "e")).alias("pos"))
             .distinct()
         )
@@ -320,38 +330,19 @@ def main(argv: list[str] | None = None) -> int:
     dropped_dup.unpersist()
     for ok in extra_ok:
         ok.unpersist()  # consumed lazily by the ranked write above
-    # release the corpus-sized tokenized checkpoint (and every other
-    # localCheckpoint this run created): Dataset.unpersist() is a no-op
-    # for localCheckpoint blocks — they are RDD-level, so free them at
-    # the RDD level, restricted to ids not persisted before this run
-    # (inside a borrowed long-lived session each CLI run would otherwise
-    # leak one full (text, arr) copy of the corpus until the session dies)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid, rdd in list(jmap.items()):
-        if rid not in pre_persisted:
-            rdd.unpersist(False)
-    wall = time.monotonic() - t0
-    print(
-        json.dumps(
-            {
-                "docs_in": n_in,
-                "docs_curated": n_curated,
-                "held_out": n_held,
-                "dropped_quality": n_quality_fail,
-                "dropped_near_dup": n_dup_dropped,
-                "dropped_lm": drops["dropped_lm"],
-                "dropped_dsir": drops["dropped_dsir"],
-                "dropped_decon": drops["dropped_decon"],
-                "tokens_removed": tokens_removed,
-                "pairs": args.pairs,
-                "order": args.order,
-                "wall_sec": round(wall, 3),
-            }
-        )
-    )
-    if owns_session:
-        spark.stop()
-    return 0
+    return {
+        "docs_in": n_in,
+        "docs_curated": n_curated,
+        "held_out": n_held,
+        "dropped_quality": n_quality_fail,
+        "dropped_near_dup": n_dup_dropped,
+        "dropped_lm": drops["dropped_lm"],
+        "dropped_dsir": drops["dropped_dsir"],
+        "dropped_decon": drops["dropped_decon"],
+        "tokens_removed": tokens_removed,
+        "pairs": args.pairs,
+        "order": args.order,
+    }
 
 
 if __name__ == "__main__":

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .artifacts import checkpoint, release
+
 __all__ = ["QUERIES", "ORACLES"]
 
 # tokenization shared by every text op — MUST stay in sync with the DuckDB
@@ -526,7 +528,7 @@ def text_gopher_quality(
         # the regex tokenize over the corpus — 3x the single most expensive
         # expression in the plan.  Checkpointing the skinny (doc_id, arr,
         # n_tokens) frame tokenizes ONCE; values are unchanged (oracle-green).
-        docs = docs.localCheckpoint(eager=True)
+        docs = checkpoint(docs)
     base = docs.select("doc_id", "arr", F.size("arr").alias("n_tokens"))
     uni = (
         base.select("doc_id", F.explode("arr").alias("w"))
@@ -688,10 +690,8 @@ def text_perplexity_bigram(
         # arr, and the regex tokenize is the most expensive expression in
         # this module — without the checkpoint it re-runs per consumer
         # (the text_gopher_quality docs-None discipline)
-        base = (
-            _docs(spark, sf_dir)
-            .select("doc_id", F.expr(_TOKS).alias("arr"))
-            .localCheckpoint(eager=True)
+        base = checkpoint(
+            _docs(spark, sf_dir).select("doc_id", F.expr(_TOKS).alias("arr"))
         )
     else:
         base = docs.select("doc_id", "arr")
@@ -1073,16 +1073,14 @@ def _train_bpe_merges_distributed(
     segmentation frame eagerly localCheckpointed per round so lineage
     never stacks across rounds.  Only one (pair, freq) row crosses the
     driver per round."""
-    segs = (
+    segs = checkpoint(
         vocab.select(
             "w",
             "wc",
             F.expr(
                 "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
             ).alias("seg"),
-        )
-        .filter(F.size("seg") >= 2)  # single-char words can never pair
-        .localCheckpoint(eager=True)
+        ).filter(F.size("seg") >= 2)  # single-char words can never pair
     )
     merges: list[tuple[int, str, str, int]] = []
     pair_expr = (
@@ -1105,15 +1103,13 @@ def _train_bpe_merges_distributed(
         prev = segs
         # fully-merged words (one token) can never pair again — drop them
         # so the working set shrinks monotonically; the previous round's
-        # checkpoint is released (the dedup_clusters loop discipline:
-        # without unpersist each round leaks a cached frame for the
-        # session lifetime)
-        segs = (
+        # checkpoint is released (without it each round leaks a cached
+        # frame for the session lifetime)
+        segs = checkpoint(
             prev.select("w", "wc", _bpe_merge_once_expr(a, b).alias("seg"))
             .filter(F.size("seg") >= 2)
-            .localCheckpoint(eager=True)
         )
-        prev.unpersist()
+        release(prev)
     return spark.createDataFrame(
         merges, "merge_rank int, left string, right string, freq bigint"
     )
@@ -1531,9 +1527,12 @@ def _connected_components(
         # iteration (a 21k-line plan by convergence; planning time and
         # driver memory scale with iterations).  On a production cluster
         # prefer checkpoint() with a checkpoint dir for fault tolerance.
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = checkpoint(new_labels)
         changed = new_labels.agg(F.sum("chg")).collect()[0][0] or 0
-        labels.unpersist()
+        labels.unpersist()  # the persisted round-0 labels
+        if rounds > 1:
+            release(prev)  # the previous round's checkpoint
+        prev = new_labels
         labels = new_labels.drop("chg")
         if changed == 0:
             break
@@ -1674,11 +1673,7 @@ def _tokenized_docs(
     cannot provide it).  ``with_text=False`` (the _tokenized_arr face)
     drops the fat text column for consumers that only shingle."""
     cols = ["doc_id", "text"] if with_text else ["doc_id"]
-    return (
-        _docs(spark, sf_dir)
-        .select(*cols, F.expr(_TOKS).alias("arr"))
-        .localCheckpoint(eager=True)
-    )
+    return checkpoint(_docs(spark, sf_dir).select(*cols, F.expr(_TOKS).alias("arr")))
 
 
 def _curate_parts(
@@ -1959,7 +1954,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint each leg re-runs the 64 hyperplane dot products per
     # vector AND Janino re-compiles the giant literal-hyperplane HOF per
     # branch (the dominant cost at gate scale: 4.5s cold vs 0.13s warm)
-    e = signlsh_band_keys(base).localCheckpoint(eager=True)
+    e = checkpoint(signlsh_band_keys(base))
     q = e.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "band_key"
     )
@@ -2309,7 +2304,7 @@ def sim_ann_ivfpq(
         # whole chain, and the probe explode substitutes the giant
         # literal-codebook expressions into every consumer (the Catalyst
         # explode trap) — and Janino recompiles them per branch.
-        staged = staged.localCheckpoint(eager=True)
+        staged = checkpoint(staged)
     finally:
         # every downstream consumer reads the checkpoint, not e's lineage
         e.unpersist()
@@ -3521,9 +3516,7 @@ def docs_dsir_weights(
     # twice; the materialized frame is three ints per occurrence.  At
     # extreme scale swap for persist(DISK_ONLY) or accept the recompute —
     # the trade is stated, not hidden.
-    fb = _dsir_fb(
-        toks, (F.col("doc_id") % _DSIR_TARGET_MOD == 0)
-    ).localCheckpoint(eager=True)
+    fb = checkpoint(_dsir_fb(toks, (F.col("doc_id") % _DSIR_TARGET_MOD == 0)))
     return _dsir_weights(toks, fb, fb)
 
 
@@ -3570,9 +3563,7 @@ def dsir_weights_frames(
     toks_t = _TOKS_T.format(col=text_col)
     raw_toks = raw_docs.select("doc_id", F.expr(toks_t).alias("arr"))
     tgt_toks = target_docs.select("doc_id", F.expr(toks_t).alias("arr"))
-    fb_raw = _dsir_fb(raw_toks, F.lit(False), buckets=buckets).localCheckpoint(
-        eager=True
-    )
+    fb_raw = checkpoint(_dsir_fb(raw_toks, F.lit(False), buckets=buckets))
     fb_lm = fb_raw.unionByName(_dsir_fb(tgt_toks, F.lit(True), buckets=buckets))
     return _dsir_weights(
         raw_toks, fb_lm, fb_raw, buckets=buckets, log_domain=log_domain
@@ -3600,13 +3591,11 @@ def _dsir_weights(
     # reuse between them), and the two corpus totals come to the driver
     # as scalars (codebook-style collect, bounded by construction) so λ
     # is pure literal arithmetic — no one-row cross join at all
-    bc = (
-        fb_lm.groupBy("b")
-        .agg(
+    bc = checkpoint(
+        fb_lm.groupBy("b").agg(
             F.sum(F.col("is_t").cast("long")).alias("ct"),
             F.sum((~F.col("is_t")).cast("long")).alias("cr"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = bc.agg(F.sum("ct").alias("tt"), F.sum("cr").alias("tr")).collect()[0]
     tt, tr = int(tot["tt"] or 0), int(tot["tr"] or 0)

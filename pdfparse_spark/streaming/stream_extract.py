@@ -22,6 +22,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.artifacts import read_batches, start_batch_stream, write_batch
 from ..pipeline.extract import (
     OUTPUT_SCHEMA,
     DEDUP_KERNEL_SCHEMA,
@@ -52,26 +53,15 @@ def start_stream_extraction(
     idempotent under micro-batch replay after a crash, same contract as the
     batch waves).
     """
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def _process_batch(batch_df, batch_id: int) -> None:
         out = run_extraction(batch_df, num_partitions=num_partitions, salt=salt)
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
-            "%s/batch=%d" % (out_dir, batch_id)
-        )
+        write_batch(out.withColumn("batch_id", F.lit(batch_id)), out_dir, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_batch_stream(
+        spark, INPUT_SCHEMA, input_dir, checkpoint_dir, _process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_stream_extraction_dedup(
@@ -119,11 +109,6 @@ def start_stream_extraction_dedup(
     """
     import hashlib
 
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
     out_fields = [f.name for f in OUTPUT_SCHEMA.fields]
     cache_root = "%s/ck=%s" % (
         cache_dir,
@@ -136,10 +121,8 @@ def start_stream_extraction_dedup(
         ).withColumn("payload_sha", payload_key())
         uniq = keyed.select("payload_sha", "text").dropDuplicates(["payload_sha"])
         try:
-            prior = (
-                spark.read.option("basePath", cache_root)
-                .parquet(cache_root + "/batch=*")
-                .filter(F.col("batch") != batch_id)  # replay-stable probe
+            prior = read_batches(spark, cache_root).filter(
+                F.col("batch") != batch_id  # replay-stable probe
             )
             new = uniq.join(prior.select("payload_sha"), "payload_sha", "left_anti")
         except AnalysisException:  # first batch: no cache dir yet
@@ -147,10 +130,9 @@ def start_stream_extraction_dedup(
         if num_partitions:
             new = new.repartition(num_partitions, F.col("payload_sha"))
         fresh = new.mapInPandas(extract_batch_dedup, schema=DEDUP_KERNEL_SCHEMA)
-        fresh.write.mode("overwrite").parquet("%s/batch=%d" % (cache_root, batch_id))
+        write_batch(fresh, cache_root, batch_id)
         cache = (
-            spark.read.option("basePath", cache_root)
-            .parquet(cache_root + "/batch=*")
+            read_batches(spark, cache_root)
             .drop("batch")
             # batch-relevant rows only, THEN dedup: the shuffle stays
             # proportional to this batch, not to the lifetime cache
@@ -158,15 +140,9 @@ def start_stream_extraction_dedup(
             .dropDuplicates(["payload_sha"])
         )
         out = keyed.drop("text").join(cache, "payload_sha", "left").select(*out_fields)
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
-            "%s/batch=%d" % (out_dir, batch_id)
-        )
+        write_batch(out.withColumn("batch_id", F.lit(batch_id)), out_dir, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_batch_stream(
+        spark, INPUT_SCHEMA, input_dir, checkpoint_dir, _process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
