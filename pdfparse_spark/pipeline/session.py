@@ -4,7 +4,12 @@ Design notes (SURVEY.md §4):
 - Arrow on, batches capped LOW: PDF byte payloads are fat rows (up to MBs);
   ``maxRecordsPerBatch`` bounds Python-worker memory, not throughput.
 - ``spark.python.worker.reuse`` keeps glyph tables / AFM dicts warm across
-  batches (module-level state survives in the reused worker).
+  batches (module-level state survives in the reused worker).  So does the
+  package's zip-cache guard (``pdfparse_spark._install_zip_cache_guard``):
+  PySpark's per-task ``importlib.invalidate_caches()`` then skips the
+  unchanged ``pyspark.zip`` / spark-core jar directories.  The first tasks
+  in each worker still pay the full re-read once: the first runs before
+  the package is imported, and the next stamps each archive.
 - AQE on for the relational shell (skew-join splitting, coalescing); the
   mapInPandas stage is skew-proofed separately by explicit salting
   (extract.py) because AQE cannot split a skewed Python stage.
